@@ -126,6 +126,25 @@ def capped_buckets(
     return kept, dropped
 
 
+def bucket_window(key_col: str, with_first: bool):
+    """The window that sizes buckets over membership rows, and (when
+    ``with_first``) the ``_first`` column marking one row per bucket
+    for the bucket accounting.  With the marker every aggregate takes
+    the whole-bucket frame of the (key, doc_id)-ordered spec, so sizes
+    and row_number share ONE Window operator over ONE sort; separate
+    specs cost a second sort of the membership rows."""
+    from pyspark.sql import Window
+
+    win = Window.partitionBy(key_col)
+    if not with_first:
+        return win, []
+    ordered = win.orderBy("doc_id")
+    return (
+        ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing),
+        [(F.row_number().over(ordered) == 1).alias("_first")],
+    )
+
+
 def bucket_pair_explode(
     exploded: DataFrame,
     key_col: str,
@@ -156,8 +175,8 @@ def bucket_pair_explode(
     key) never materializes as an in-memory array on any executor.
     The window sort is spillable; collect_list is not.  Accounting
     therefore also rides the membership rows (dropped_rows = member
-    rows in oversized buckets; dropped_buckets via each bucket's
-    row_number()==1 representative).
+    rows in oversized buckets; dropped_buckets and buckets via each
+    bucket's row_number()==1 representative).
     """
     if payload_col is None:
         member = F.col("doc_id")
@@ -166,22 +185,17 @@ def bucket_pair_explode(
             F.col("doc_id").alias("id"), F.col(payload_col).alias("pl")
         )
     if max_bucket_size is not None:
-        from pyspark.sql import Window
-
         over = F.col("_bsz") > max_bucket_size
-        sized = exploded.withColumn(
-            "_bsz", F.count(F.lit(1)).over(Window.partitionBy(key_col))
-        ).withColumn(
-            "_brn",
-            F.row_number().over(Window.partitionBy(key_col).orderBy("doc_id")),
+        win, first = bucket_window(key_col, observation is not None)
+        sized = exploded.select(
+            "*", F.count(F.lit(1)).over(win).alias("_bsz"), *first
         )
         if observation is not None:
-            first = F.col("_brn") == 1
             sized = sized.observe(
                 observation,
-                F.sum((over & first).cast("long")).alias("dropped_buckets"),
+                F.sum((over & F.col("_first")).cast("long")).alias("dropped_buckets"),
                 F.sum(over.cast("long")).alias("dropped_rows"),
-                F.sum(first.cast("long")).alias("buckets"),
+                F.sum(F.col("_first").cast("long")).alias("buckets"),
             )
         bounded = sized.where((F.col("_bsz") >= 2) & ~over)
         grouped = bounded.groupBy(key_col).agg(
@@ -262,8 +276,9 @@ def attach_pair_payloads(
 
 def band_buckets(signatures: DataFrame, bands: int = hashing.DEFAULT_BANDS) -> DataFrame:
     """(doc_id, band_key) LSH band bucket membership rows.  The single
-    definition of the band key — batch self-join, bucketed-layout, and
-    incremental new-vs-store paths all derive keys here, so two
+    definition of the band key for signature frames; the fused
+    fingerprint pass stores the same keys (hashing.band_hashes_batch,
+    pinned equal by tests/test_fused_fingerprints.py), so two
     signatures always meet in the same bucket regardless of path."""
     band_udf = hashing.make_band_hash_udf(bands=bands)
     return signatures.select(
@@ -276,7 +291,6 @@ def lsh_candidate_pairs(
     bands: int = hashing.DEFAULT_BANDS,
     max_bucket_size: int | None = 1000,
     observation=None,
-    buckets: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Banded LSH: signature -> band bucket keys -> bucket self-join.
 
@@ -284,13 +298,8 @@ def lsh_candidate_pairs(
     with doc_a < doc_b; dropped_buckets accounts for buckets over
     ``max_bucket_size`` (hub boilerplate) that were excluded rather
     than silently exploding the join quadratically.
-
-    ``buckets`` (optional): precomputed (doc_id, band_key) membership
-    rows — e.g. exploded from the fused fingerprint frame's stored
-    ``bands`` column, which skips the band-hash Python pass entirely.
     """
-    if buckets is None:
-        buckets = band_buckets(signatures, bands)
+    buckets = band_buckets(signatures, bands)
     pairs = bucket_pair_explode(
         buckets, "band_key", max_bucket_size, observation=observation
     ).distinct()
@@ -302,44 +311,6 @@ def lsh_candidate_pairs(
             F.count("*").alias("bucket_size")
         ).where(F.lit(False))
     return pairs, dropped
-
-
-def lsh_candidate_pairs_bucketed(
-    signatures: DataFrame,
-    table_name: str,
-    bands: int = hashing.DEFAULT_BANDS,
-    n_buckets: int = 64,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """LSH candidate join over a *bucketed* band table (SURVEY.md §4
-    item 3): band keys are materialized once into a managed table
-    bucketed+sorted by band_key, so the self-join (and any re-run
-    against the same table) is exchange-free — both join inputs arrive
-    pre-partitioned and pre-sorted.  Verified by
-    tests/test_bucketed_layout.py, which asserts the physical plan has
-    no Exchange under the join."""
-    from ..sources.tables import replace_bucketed_table
-
-    buckets = band_buckets(signatures, bands)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band_key").agg(F.count("*").alias("sz"))
-        buckets = buckets.join(
-            sizes.where(
-                (F.col("sz") > 1) & (F.col("sz") <= max_bucket_size)
-            ).select("band_key"),
-            "band_key",
-        )
-    stored = replace_bucketed_table(buckets, table_name, n_buckets, "band_key")
-    left = stored.select("band_key", F.col("doc_id").alias("doc_a"))
-    right = stored.select("band_key", F.col("doc_id").alias("doc_b"))
-    # MERGE hint: sort-merge is the strategy that exploits the bucketed
-    # sorted layout (broadcast would be chosen for tiny test tables)
-    return (
-        left.hint("merge").join(right, "band_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 def verify_pairs_jaccard(
@@ -423,40 +394,7 @@ def simhash_block_keys(
     fingerprints: DataFrame, max_hamming: int = 3, n_blocks: int = 6
 ) -> DataFrame:
     """(doc_id, simhash, block_key) — one row per Manku block-subset
-    key (C(n_blocks, n_blocks - max_hamming) keys per doc), all native
-    bit/hash expressions.  Shared by the batch self-join path and the
-    incremental new-vs-store path (operators/incremental.py), which
-    must derive IDENTICAL keys for both sides to meet in a bucket."""
-    from itertools import combinations
-
-    if n_blocks <= max_hamming:
-        raise ValueError("n_blocks must exceed max_hamming")
-    subset = n_blocks - max_hamming
-    width = 64 // n_blocks
-    block_cols = [
-        F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
-            F.lit((1 << width) - 1) if i < n_blocks - 1 else F.lit((1 << (64 - i * width)) - 1)
-        )
-        for i in range(n_blocks)
-    ]
-    keys = [
-        F.xxhash64(F.lit(combo_id), *[block_cols[i] for i in combo])
-        for combo_id, combo in enumerate(combinations(range(n_blocks), subset))
-    ]
-    return fingerprints.select(
-        "doc_id",
-        F.col("simhash"),
-        F.explode(F.array(*keys)).alias("block_key"),
-    )
-
-
-def simhash_candidate_pairs(
-    fingerprints: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 1000,
-    n_blocks: int = 6,
-) -> DataFrame:
-    """Fuzzy-duplicate candidates within `max_hamming` bits.
+    key, all native bit/hash expressions.
 
     Block-combination bucketing (Manku et al., WWW'07): split the 64
     bits into ``n_blocks`` blocks; at most ``max_hamming`` blocks can
@@ -465,22 +403,32 @@ def simhash_candidate_pairs(
     every such subset (C(6,3)=20 keys per doc at the defaults) gives
     ~32+ bits of bucket entropy — unlike single-block keys (16 bits),
     bucket occupancy stays O(true duplicates) as the corpus grows, so
-    the self-join does not go quadratic at web scale.  Pairs are
-    confirmed with an exact popcount on the XOR (native bit ops).
-    """
-    fp = simhash_block_keys(fingerprints, max_hamming, n_blocks)
-    pairs = bucket_pair_explode(
-        fp,
-        "block_key",
-        max_bucket_size,
-        payload_col="simhash",
-        out_payload=("fp_a", "fp_b"),
+    candidate generation does not go quadratic at web scale.  Both
+    sides of the new-vs-store path (operators/incremental.py) derive
+    keys here, so they meet in IDENTICAL buckets; pairs are confirmed
+    with an exact popcount on the XOR (native bit ops)."""
+    from itertools import combinations
+
+    if n_blocks <= max_hamming:
+        raise ValueError("n_blocks must exceed max_hamming")
+    subset = n_blocks - max_hamming
+    width = 64 // n_blocks
+    blocks = [
+        f"(shiftrightunsigned(simhash, {i * width}) & "
+        f"{(1 << (width if i < n_blocks - 1 else 64 - i * width)) - 1})"
+        for i in range(n_blocks)
+    ]
+    keys = ", ".join(
+        f"xxhash64({combo_id}, {', '.join(blocks[i] for i in combo)})"
+        for combo_id, combo in enumerate(combinations(range(n_blocks), subset))
     )
-    return (
-        pairs.distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    # ONE SQL expression, parsed JVM-side in one call: the same keys
+    # built from Column objects cost ~150 py4j calls (~0.15 s of
+    # driver time per call site, paid for the store side too)
+    return fingerprints.select(
+        "doc_id",
+        F.col("simhash"),
+        F.explode(F.expr(f"array({keys})")).alias("block_key"),
     )
 
 

@@ -1,6 +1,6 @@
 """Fused fingerprint pass: MinHash + SimHash + winnowing in ONE scan.
 
-The batch dedup pipeline needs three text fingerprints per document
+The dedup pipeline needs three text fingerprints per document
 (MinHash signature for LSH, SimHash for fuzzy bit-distance pairs,
 winnowing fingerprints for the substring stage).  Computing them in
 separate operators costs three Arrow transfers of the full text
@@ -63,9 +63,9 @@ def make_fused_fingerprint_udf(
             )
             winnows.append(winnow_fingerprints(text, kgram, window).tolist())
         # LSH band bucket keys are a pure function of the signature:
-        # computing them HERE means neither the batch LSH stage nor
-        # any later incremental delta run pays a Python pass over
-        # stored signatures — buckets explode from a stored column.
+        # computing them HERE means no pipeline run, batch or delta,
+        # pays a Python pass over stored signatures — buckets explode
+        # from a stored column.
         # Band folding runs as a BATCH kernel (4-13x: tiny fixed-size
         # rows pay mostly numpy call overhead per doc); MinHash /
         # SimHash / winnow stay per-doc — batch forms were measured

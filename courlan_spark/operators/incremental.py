@@ -8,9 +8,12 @@ the whole incremental run touches only the delta), its bucket keys are
 joined against the store's, and only pairs with at least one NEW side
 are generated, verified, and folded into the existing cluster table.
 
+A batch run is a delta run against the empty store (pipeline.
+FingerprintStore.empty): every operator here reduces to its batch form
+when the store side is known empty, so the two share one code path.
 Candidate completeness equals the full-run path by construction: both
-sides derive bucket keys through the same single definition
-(dedup.band_buckets / dedup.simhash_block_keys / the stored winnow
+sides derive bucket keys through the same single definition (the
+stored band keys / dedup.simhash_block_keys / the stored winnow
 array), so a (new, old) near-duplicate meets in exactly the buckets
 the full run would have put it in.  tests/test_incremental.py pins
 base-run + delta-run == one full run, bit-for-bit on (doc_id,
@@ -34,7 +37,23 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing
 from .cc import connected_components_bounded
-from .dedup import band_buckets, simhash_block_keys
+from .dedup import (
+    band_buckets,
+    bucket_pair_explode,
+    bucket_window,
+    cluster_assignments,
+    simhash_block_keys,
+)
+
+
+def known_empty(df: DataFrame) -> bool:
+    """True when the optimizer has already reduced ``df`` to an empty
+    local relation — every frame of ``FingerprintStore.empty`` and any
+    projection of one.  Decided from the plan alone, with no job; a
+    store read from snapshots is never known empty, however few rows
+    it holds."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation" and plan.data().isEmpty()
 
 
 def incremental_bucket_pairs(
@@ -77,8 +96,14 @@ def incremental_bucket_pairs(
     exchange of the store rows beats a shuffled semi-join PLUS that
     same exchange).
     """
-    from pyspark.sql import Window
-
+    if known_empty(old_rows):
+        # the empty store (a batch run): every member is new, so the
+        # pairs and the accounting are exactly the batch operator's,
+        # without the new/old bookkeeping a store side needs
+        return bucket_pair_explode(
+            new_rows, key_col, max_bucket_size, observation=observation,
+            payload_col=payload_col, out_payload=out_payload,
+        )
     if payload_col is None:
         member = F.col("doc_id")
     else:
@@ -93,23 +118,25 @@ def incremental_bucket_pairs(
         old_rows.select(*cols, F.lit(False).alias("_new"))
     )
 
-    win = Window.partitionBy(key_col)
-    sized = tagged.withColumn(
-        "_bsz", F.count(F.lit(1)).over(win)
-    ).withColumn("_nnew", F.sum(F.col("_new").cast("long")).over(win))
+    # one Window operator over one sort (see dedup.bucket_pair_explode)
+    win, first = bucket_window(key_col, observation is not None)
+    sized = tagged.select(
+        "*",
+        F.count(F.lit(1)).over(win).alias("_bsz"),
+        F.sum(F.col("_new").cast("long")).over(win).alias("_nnew"),
+        *first,
+    )
     over = (
         (F.col("_bsz") > max_bucket_size)
         if max_bucket_size is not None
         else F.lit(False)
     )
     if observation is not None:
-        first = (
-            F.row_number().over(win.orderBy("doc_id")) == 1
-        )
-        sized = sized.withColumn("_first", first).observe(
+        sized = sized.observe(
             observation,
             F.sum((over & F.col("_first")).cast("long")).alias("dropped_buckets"),
             F.sum(over.cast("long")).alias("dropped_rows"),
+            F.sum(F.col("_first").cast("long")).alias("buckets"),
             F.sum(
                 (F.col("_first") & (F.col("_nnew") >= 1)).cast("long")
             ).alias("active_buckets"),
@@ -245,15 +272,14 @@ def incremental_text_pairs(
     connectivity: old docs sharing the hash are already clustered by
     the base run, so linking new docs to ANY old member yields the same
     transitive closure."""
-    old_reps = old_hashes.groupBy("text_hash").agg(
-        F.min("doc_id").alias("old_rep")
-    )
-    new_min = new_hashes.groupBy("text_hash").agg(
-        F.min("doc_id").alias("new_min")
-    )
-    reps = new_min.join(old_reps, "text_hash", "left").select(
-        "text_hash", F.coalesce("old_rep", "new_min").alias("rep")
-    )
+    reps = new_hashes.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
+    if not known_empty(old_hashes):
+        old_reps = old_hashes.groupBy("text_hash").agg(
+            F.min("doc_id").alias("old_rep")
+        )
+        reps = reps.join(old_reps, "text_hash", "left").select(
+            "text_hash", F.coalesce("old_rep", "rep").alias("rep")
+        )
     edges = (
         new_hashes.join(reps, "text_hash")
         .where(F.col("doc_id") != F.col("rep"))
@@ -284,7 +310,10 @@ def prune_store_by_pair_ids(
     The driver-side collect is bounded (≤ cap longs from an
     already-persisted pair set — no DAG re-run) and falls back to the
     unpruned table beyond ``cap``, where the broadcast verify join
-    alone remains correct, just less IO-selective."""
+    alone remains correct, just less IO-selective.  A known-empty
+    store (a batch run) has no scan to prune: nothing is collected."""
+    if known_empty(store_table):
+        return store_table
     return prune_store_by_ids(
         store_table, collect_pair_ids(pair_frames, id_col=id_col, cap=cap),
         id_col=id_col,
@@ -395,6 +424,9 @@ def merge_assignments(
     the members' min doc_id already, and unaffected components have
     the same membership either way.  Returns (doc_id, cluster_id)
     covering old ∪ new docs."""
+    if known_empty(old_assignments):
+        # the empty store (a batch run): every component is new
+        return cluster_assignments(new_doc_ids, new_pairs, max_iterations=max_iterations)
     endpoints = new_pairs.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()

@@ -207,7 +207,6 @@ def substring_candidate_pairs(
     w: int = DEFAULT_WINDOW,
     max_bucket_size: int | None = 128,
     min_shared_fps: int = 2,
-    winnow: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b) sharing >= min_shared_fps winnowed fingerprints.
 
@@ -219,28 +218,18 @@ def substring_candidate_pairs(
     buckets (> max_bucket_size docs) are boilerplate shared by whole
     site families; they are excluded here and belong to the exact-text
     / MinHash paths.
-
-    ``winnow`` (optional): precomputed (doc_id, winnow array<long>)
-    fingerprints — e.g. from operators.fingerprints.fused_fingerprints,
-    which shares one text scan across all three fingerprint kernels;
-    when given, the text column is never touched here.
     """
     from .dedup import bucket_pair_explode
 
-    if winnow is not None:
-        fps = winnow.select(
-            F.col(id_col).alias("doc_id"), F.explode("winnow").alias("fp")
-        )
-    else:
-        udf = make_winnow_udf(k, w)
-        # hash-spread on the unique id — keyless repartition pays a
-        # sortBeforeRepartition pass (see dedup.minhash_signatures)
-        source = docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-        )
-        fps = source.select(
-            F.col(id_col).alias("doc_id"), F.explode(udf(F.col(text_col))).alias("fp")
-        )
+    udf = make_winnow_udf(k, w)
+    # hash-spread on the unique id — keyless repartition pays a
+    # sortBeforeRepartition pass (see dedup.minhash_signatures)
+    source = docs.repartition(
+        docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    )
+    fps = source.select(
+        F.col(id_col).alias("doc_id"), F.explode(udf(F.col(text_col))).alias("fp")
+    )
     joined = (
         bucket_pair_explode(fps, "fp", max_bucket_size)
         .groupBy("doc_a", "doc_b")

@@ -19,6 +19,10 @@ store — operators/incremental.py):
 `--store-workdir` may repeat (oldest first) to chain delta batches;
 the run writes delta-scoped snapshots plus the fully merged
 09_assignments, so its own workdir becomes the next chain link.
+Both forms run the same stage graph: without `--store-workdir` the
+input is a delta against the empty store.  Only a delta run sizes the
+shuffle width to its input (`--delta-shuffle-partitions`); a batch
+run keeps the session's.
 
 Input: a parquet table shaped (url string, warc_ts timestamp,
 html binary, text string, lang string) — the Common-Crawl-style page

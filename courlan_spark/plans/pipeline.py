@@ -1,12 +1,22 @@
 """End-to-end near-duplicate pipeline with snapshot checkpoints.
 
-    pages ──check_url UDF──> canonical urls
-          ──exact URL dedup (salted hash-agg)──> survivors
-          ──exact text dedup (md5 groups)──────> pair evidence
-          ──MinHash ─ LSH ─ Jaccard verify─────> pair evidence
-          ──SimHash (hamming ≤ 3)──────────────> pair evidence
-          ──winnowing + substring verify───────> pair evidence
-          ──connected components───────────────> cluster table
+One stage graph serves both entry points: ``run(pages)`` is the delta
+run against ``FingerprintStore.empty`` and ``run_incremental(delta,
+store)`` the same graph against a stored base, so a batch run and
+base + delta runs agree by construction.  ⊕ store marks where the
+store joins in; against the empty store the optimizer removes it.
+
+    pages ─01 check_url UDF──────────────────> canonical urls
+          ─02 exact URL dedup (⊕ store urls)─> url-unique docs
+          ─04 ONE fused fingerprint scan─────> MinHash, SimHash,
+                                               winnow, band keys, md5
+    overlapped, new x (new ⊕ store) pairs only:
+          ─05 LSH candidates ─ Jaccard verify─> pair evidence
+          ─06 SimHash (hamming ≤ 3)──────────> pair evidence
+          ─07 winnow candidates ─ LCS verify─> pair evidence
+          ─03 exact text (md5 groups)────────> pair evidence
+          ─08 evidence union
+          ─09 components (⊕ store clusters)──> cluster table
 
 Every stage materializes to a parquet snapshot under ``workdir`` and
 is skipped on resume when its `_SUCCESS` marker exists — the sandbox
@@ -19,9 +29,11 @@ returned and appended to ``workdir/metrics.json``.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +56,6 @@ class DedupConfig:
     salt_partitions: int | None = None
     with_substring_stage: bool = True
     with_simhash_stage: bool = True
-    # one Arrow pass computing MinHash+SimHash+winnow together (the
-    # 100 TB default: one text scan instead of three); False falls back
-    # to the per-kernel operators (column-identical — test_fused_fingerprints)
-    fused_fingerprints: bool = True
     # optional pre-fingerprint corpus gate (training-data curation):
     # docs outside [min_tokens, max_tokens] or below min_alpha_ratio
     # leave the corpus before any fingerprint work; None disables each
@@ -64,15 +72,6 @@ class DedupConfig:
     # snapshot to parquet — fewer driver barriers, better scaling when
     # stage outputs are small relative to job overhead.
     snapshot_mode: str = "all"
-    # materialize INDEPENDENT evidence stages concurrently (guide §2.6:
-    # actions are only sequential because driver code calls them
-    # sequentially): once the fingerprint frame exists, the exact-text,
-    # SimHash and substring-candidate stages share no dependency with
-    # the MinHash verify chain, so their jobs back-fill executors the
-    # verify chain's stage tails leave idle.  Spark schedules
-    # concurrent jobs FIFO — the earlier job keeps priority, later
-    # ones use the slack.  False restores the serial r5 order.
-    overlap_stages: bool = True
     extra: dict = field(default_factory=dict)
 
 
@@ -86,10 +85,10 @@ class FingerprintStore:
     """The persisted state an incremental (delta-batch) run joins
     against: the base run's url-unique corpus, its fused fingerprint
     frame, and its cluster table.  ``from_workdir`` loads the three
-    from a completed snapshot_mode="all" pipeline run with
-    fused_fingerprints=True — the store must come from the same
-    DedupConfig (num_perm/shingle_k/seed/bands) the incremental run
-    uses, or bucket keys will not line up."""
+    from a completed snapshot_mode="all" pipeline run — the store must
+    come from the same DedupConfig (num_perm/shingle_k/seed/bands) the
+    incremental run uses, or bucket keys will not line up.  ``empty``
+    is the store a batch run joins against."""
 
     docs: DataFrame          # doc_id, norm_url, domain, warc_ts, text, lang
     fingerprints: DataFrame  # doc_id, signature, simhash, winnow, text_hash
@@ -113,11 +112,7 @@ class FingerprintStore:
         hand) passes with no check — the caller owns the invariant."""
         if self.config is None:
             return
-        mismatches = {
-            k: (self.config.get(k), getattr(cfg, k))
-            for k in self.KEY_FIELDS
-            if self.config.get(k) != getattr(cfg, k)
-        }
+        mismatches = self._key_diff(self.config, vars(cfg))
         if mismatches:
             raise ValueError(
                 "incremental config disagrees with the fingerprint "
@@ -128,6 +123,13 @@ class FingerprintStore:
             )
 
     @classmethod
+    def _key_diff(cls, a: dict, b: dict) -> dict:
+        "{field: (a's value, b's value)} over the key fields that differ."
+        return {
+            k: (a.get(k), b.get(k)) for k in cls.KEY_FIELDS if a.get(k) != b.get(k)
+        }
+
+    @classmethod
     def _load_config(cls, workdir: str) -> dict | None:
         path = os.path.join(workdir, "config.json")
         if not os.path.exists(path):
@@ -136,14 +138,47 @@ class FingerprintStore:
             return json.load(fh)
 
     @classmethod
+    def empty(cls, spark: SparkSession) -> "FingerprintStore":
+        """The store with no rows, in the store schemas.  Its frames
+        plan as empty LOCAL relations (``LIMIT 0``), which the
+        optimizer's empty-relation propagation removes from every
+        union, join and exchange they feed; a ``createDataFrame([])``
+        frame is an RDD scan the optimizer cannot see into, so every
+        store side would stay in the plans."""
+        from ..operators.fingerprints import FUSED_SCHEMA
+
+        def empty(schema: str) -> DataFrame:
+            cols = (col.split(" ", 1) for col in schema.split(", "))
+            nulls = ", ".join(f"CAST(NULL AS {typ}) AS {name}" for name, typ in cols)
+            return spark.sql(f"SELECT {nulls} LIMIT 0")
+
+        return cls(
+            docs=empty(
+                "doc_id long, norm_url string, domain string, "
+                "warc_ts timestamp, text string, lang string, n_copies long"
+            ),
+            fingerprints=empty(f"doc_id long, {FUSED_SCHEMA}, text_hash string"),
+            assignments=empty("doc_id long, cluster_id long"),
+        )
+
+    @property
+    def is_empty(self) -> bool:
+        "True for ``empty()`` — decided from the plans, with no job."
+        from ..operators.incremental import known_empty
+
+        return all(
+            known_empty(df)
+            for df in (self.docs, self.fingerprints, self.assignments)
+        )
+
+    @classmethod
     def from_workdir(cls, spark: SparkSession, workdir: str) -> "FingerprintStore":
         def need(stage: str) -> DataFrame:
             path = _snapshot_path(workdir, stage)
             if not _has_snapshot(path):
                 raise FileNotFoundError(
                     f"store stage {stage!r} missing under {workdir} — the "
-                    "base run must use snapshot_mode='all' and "
-                    "fused_fingerprints=True"
+                    "base run must use snapshot_mode='all'"
                 )
             return _read_snapshot(spark, path)
 
@@ -175,11 +210,7 @@ class FingerprintStore:
         # chained batches must agree on key fields among themselves too
         configs = [s.config for s in stores if s.config is not None]
         for other in configs[1:]:
-            diff = {
-                k: (configs[0].get(k), other.get(k))
-                for k in cls.KEY_FIELDS
-                if configs[0].get(k) != other.get(k)
-            }
+            diff = cls._key_diff(configs[0], other)
             if diff:
                 raise ValueError(
                     f"chained store workdirs disagree on key fields {diff}"
@@ -260,14 +291,11 @@ class DedupPipeline:
                 fh,
             )
 
-    # snapshots a later incremental run scans selectively are written
-    # range-sorted by doc_id, so parquet footer min/max support file
-    # skipping for the candidate-id predicates the delta verify pushes
-    # (Iceberg sorted-write-order analog; see tables.write_snapshot)
-    # one fact: the key column the store stages are scanned by.  The
+    # the key column a later delta run scans the store stages by: the
     # snapshot is range-sorted by it (file skipping via footer min/max
-    # for the candidate-id predicates) AND carries a parquet bloom
-    # filter on it (row-group point skipping inside surviving files).
+    # for the candidate-id predicates; Iceberg sorted-write-order
+    # analog, see tables.write_snapshot) AND carries a parquet bloom
+    # filter on it (row-group point skipping inside surviving files)
     _STAGE_KEY_COLS = {"02_url_dedup": ["doc_id"], "04_fingerprints": ["doc_id"]}
 
     def _stage(
@@ -287,41 +315,37 @@ class DedupPipeline:
         # independent serial term of the spark-submit scaling record.
         # Resume stays correct: a killed run recomputes the ephemeral
         # frame deterministically inside its durable consumer's build.
-        if kind == "ephemeral":
-            started = time.time()
-            df = build()
-            self.metrics.append(
-                {"stage": name, "kind": "ephemeral",
-                 "secs": round(time.time() - started, 3)}
-            )
+        started = time.time()
+        metric = {"stage": name}
+
+        def done(df: DataFrame, **fields) -> DataFrame:
+            metric.update(fields, secs=round(time.time() - started, 3))
+            self.metrics.append(metric)
             return df
-        if self.config.snapshot_mode == "minimal" and kind != "snapshot":
-            started = time.time()
+
+        if kind == "ephemeral" or (
+            self.config.snapshot_mode == "minimal" and kind != "snapshot"
+        ):
             df = build()
-            if kind == "persist":
+            if kind in ("persist", "persist_lazy"):
                 df = df.persist()
-                df.count()  # materialize the cache once
-            elif kind == "persist_lazy":
-                # persist WITHOUT the count barrier: the cache fills
+                # persist_lazy skips the count barrier: the cache fills
                 # inside the next stage's (single-consumer) job — used
                 # for 02, whose only consumer before the overlap group
                 # is 04's eager materialization, so no concurrent jobs
                 # can race the cache build (guide §2.6 serial-term cut)
-                df = df.persist()
-            self.metrics.append(
-                {"stage": name, "kind": kind, "secs": round(time.time() - started, 3)}
-            )
-            return df
+                if kind == "persist":
+                    df.count()  # materialize the cache once
+            return done(df, kind=kind)
         path = _snapshot_path(self.workdir, name)
-        started = time.time()
         if resume and _has_snapshot(path):
-            df = _read_snapshot(self.spark, path)
-            self.metrics.append(
-                {"stage": name, "resumed": True, "secs": round(time.time() - started, 3)}
-            )
-            return df
+            return done(_read_snapshot(self.spark, path), resumed=True)
         df = build()
-        if overlap_write and self.config.overlap_stages:
+        write = dict(
+            order_by=self._STAGE_KEY_COLS.get(name),
+            bloom_cols=self._STAGE_KEY_COLS.get(name),
+        )
+        if overlap_write:
             # The stage's CONSUMERS only need the frame; only the NEXT
             # RUN (resume / store chaining) needs the files.  Persist +
             # count materializes the data once, then the parquet write
@@ -340,41 +364,17 @@ class DedupPipeline:
             n_rows = df.count()
             if self._write_pool is None:
                 self._write_pool = ThreadPoolExecutor(max_workers=2)
-            fut = self._write_pool.submit(
-                _write_snapshot,
-                df,
-                path,
-                order_by=self._STAGE_KEY_COLS.get(name),
-                bloom_cols=self._STAGE_KEY_COLS.get(name),
+            self._pending_writes.append(
+                (name, self._write_pool.submit(_write_snapshot, df, path, **write))
             )
-            self._pending_writes.append((name, fut))
-            metric = {
-                "stage": name,
-                "resumed": False,
-                "kind": "snapshot_overlap",
-                "secs": round(time.time() - started, 3),
-            }
-            if self.count_rows:
-                metric["rows"] = n_rows
-            self.metrics.append(metric)
-            return df
-        _write_snapshot(
-            df,
-            path,
-            order_by=self._STAGE_KEY_COLS.get(name),
-            bloom_cols=self._STAGE_KEY_COLS.get(name),
-        )
+            counts = {"rows": n_rows} if self.count_rows else {}
+            return done(df, resumed=False, kind="snapshot_overlap", **counts)
+        _write_snapshot(df, path, **write)
         out = _read_snapshot(self.spark, path)
-        metric = {
-            "stage": name,
-            "resumed": False,
-            "secs": round(time.time() - started, 3),
-        }
+        counts = {}
         if self.count_rows:
-            metric["rows"] = out.count()
-            metric["partitions"] = out.rdd.getNumPartitions()
-        self.metrics.append(metric)
-        return out
+            counts = {"rows": out.count(), "partitions": out.rdd.getNumPartitions()}
+        return done(out, resumed=False, **counts)
 
     def _join_writes(self) -> None:
         """Block on every deferred snapshot write (re-raising failures)
@@ -392,18 +392,26 @@ class DedupPipeline:
             self._write_pool.shutdown(wait=True)
             self._write_pool = None
 
-    def _materialize_stages(self, specs, resume: bool) -> dict:
-        """Materialize several INDEPENDENT stages — concurrently when
-        ``config.overlap_stages`` (guide §2.6: Spark happily runs
-        several jobs at once inside one application; actions are only
-        sequential because driver code calls them sequentially), else
-        in the given order.  ``specs`` is a list of
+    def _drop_writes(self) -> None:
+        """Failure path: cancel the deferred writes not yet started,
+        wait for the running ones, and forget them all, so a retry on
+        this object starts clean and the run's own error is the one
+        raised (a dropped write leaves no _SUCCESS marker, so resume
+        rebuilds its stage).  A no-op after ``_join_writes``."""
+        if self._write_pool is not None:
+            self._write_pool.shutdown(wait=True, cancel_futures=True)
+            self._write_pool = None
+        self._pending_writes.clear()
+
+    def _materialize_stages(self, specs) -> dict:
+        """Materialize several INDEPENDENT stages concurrently (guide
+        §2.6: Spark happily runs several jobs at once inside one
+        application; actions are only sequential because driver code
+        calls them sequentially).  ``specs`` is a list of
         (name, callable) pairs where the callable runs the stage(s) and
         returns the stage result; the first spec is submitted first, so
         under FIFO scheduling it keeps resource priority and the later
         stages back-fill its stage tails.  Exceptions propagate."""
-        if not self.config.overlap_stages or len(specs) == 1:
-            return {name: fn() for name, fn in specs}
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(specs)) as pool:
@@ -426,12 +434,7 @@ class DedupPipeline:
             n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^a-zA-Z]", ""))
             safe = F.greatest(F.length(F.col("text")), F.lit(1)).cast("double")
             conds.append((n_alpha / safe) >= F.lit(cfg.min_alpha_ratio))
-        if not conds:
-            return None
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
-        return cond
+        return reduce(operator.and_, conds) if conds else None
 
     def _canonical_frame(self, pages: DataFrame) -> DataFrame:
         cfg = self.config
@@ -451,261 +454,10 @@ class DedupPipeline:
         )
 
     def run(self, pages: DataFrame, resume: bool = False) -> dict:
-        cfg = self.config
-        self._persist_config()
-
-        # free row-count metrics via observe(): recorded on the single
-        # physical pass, no extra jobs (the north rule's per-stage
-        # metrics without count() barriers)
-        from pyspark.sql import Observation
-
-        self._observations = {}
-
-        def observed(name: str, df: DataFrame) -> DataFrame:
-            obs = Observation(name)
-            self._observations[name] = obs
-            return df.observe(obs, F.count(F.lit(1)).alias("rows"))
-
-        # ---- stage 1: URL canonicalization (vectorized check_url) ----
-        def build_canonical():
-            return observed("canonical_rows", self._canonical_frame(pages))
-
-        canonical = self._stage("01_canonical", build_canonical, resume, kind="ephemeral")
-
-        # ---- stage 2: exact URL dedup (earliest capture wins) ----
-        def build_url_dedup():
-            return dedup.exact_dedup(
-                canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
-                key_cols=["norm_url"],
-                order_cols=["warc_ts", "doc_id"],
-                salt_partitions=cfg.salt_partitions,
-            )
-
-        url_unique = self._stage("02_url_dedup", build_url_dedup, resume,
-                                 kind="persist_lazy", overlap_write=True)
-
-        # optional training-data quality gate (config bounds), applied
-        # identically in full and incremental modes — per-row
-        # deterministic, so the two stay provably equivalent
-        quality = self._quality_condition()
-        if quality is not None:
-            url_unique = self._stage(
-                "02b_quality_gate",
-                lambda: observed("quality_kept", url_unique.where(quality)),
-                resume,
-                kind="lazy",
-            )
-
-        # ---- stage 3: exact text pair evidence (md5 hash groups) ----
-        def build_text_pairs():
-            hashed = url_unique.select(
-                "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_hash")
-            )
-            reps = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("rep"))
-            return (
-                hashed.join(reps, "text_hash")
-                .where(F.col("doc_id") != F.col("rep"))
-                .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-            )
-
-        # 03 materializes INSIDE the overlap group below (guide §2.6):
-        # as an ephemeral frame it was recomputed inside 08's evidence
-        # checkpoint — ~0.9-1.4 s of md5+groupBy+join sitting on the
-        # post-overlap critical path, while the 05 wall leaves 06/07
-        # idle tail to absorb it (tools/exp_r06_stage08.py).  It only
-        # needs the 02 cache, which 04's eager materialization fills
-        # before the group starts.
-
-        # ---- stage 4: ALL text fingerprints in ONE scan ----
-        # MinHash + SimHash + winnowing share a single Arrow transfer
-        # and text decode (operators/fingerprints.py) — at corpus scale
-        # this is one pass over the text column instead of three.
-        def build_fingerprints():
-            if not cfg.fused_fingerprints:
-                return dedup.minhash_signatures(
-                    url_unique,
-                    num_perm=cfg.num_perm,
-                    shingle_k=cfg.shingle_k,
-                    seed=cfg.seed,
-                )
-            from ..operators.fingerprints import fused_fingerprints
-
-            return fused_fingerprints(
-                url_unique,
-                num_perm=cfg.num_perm,
-                shingle_k=cfg.shingle_k,
-                seed=cfg.seed,
-                bands=cfg.bands,
-            )
-
-        fingerprints = self._stage(
-            "04_fingerprints", build_fingerprints, resume, kind="persist",
-            overlap_write=True,
-        )
-        signatures = fingerprints.select("doc_id", "signature")
-
-        def build_minhash_pairs():
-            # dropped-bucket accounting rides observe() on the pass
-            # that computes the buckets anyway — zero extra jobs
-            lsh_obs = Observation("05_lsh_buckets")
-            self._observations["lsh_buckets"] = lsh_obs
-            candidates, _ = dedup.lsh_candidate_pairs(
-                signatures,
-                bands=cfg.bands,
-                max_bucket_size=cfg.max_bucket_size,
-                observation=lsh_obs,
-                # stored band keys: no band-hash Python pass here
-                buckets=(
-                    fingerprints.select(
-                        "doc_id", F.explode("bands").alias("band_key")
-                    )
-                    if cfg.fused_fingerprints
-                    else None
-                ),
-            )
-            verified = dedup.verify_pairs_jaccard(
-                candidates,
-                url_unique,
-                signatures=signatures,
-                threshold=cfg.jaccard_threshold,
-                shingle_k=cfg.shingle_k,
-            )
-            return verified.select("doc_a", "doc_b")
-
-        # ---- stages 5-7: evidence stages, OVERLAPPED (guide §2.6) ----
-        # The MinHash verify chain (05) is the long pole; the SimHash
-        # pairs and the substring CANDIDATES depend only on the
-        # fingerprint frame, so their jobs run concurrently and
-        # back-fill the verify chain's stage tails.  05 is submitted
-        # first and keeps FIFO priority.  (r5 ran these serially; the
-        # substring stage additionally waited on 05 for its anti-join —
-        # the anti-join now applies at VERIFY time instead, which is
-        # equivalent: evidence is a union, so pruning pairs the MinHash
-        # path already verified from the expensive LCS verification
-        # changes nothing — measured 100% overlap on the bench corpus.)
-        def build_simhash_pairs():
-            fps = (
-                fingerprints.select("doc_id", "simhash")
-                if cfg.fused_fingerprints
-                else dedup.simhash_fingerprints(url_unique)
-            )
-            return dedup.simhash_candidate_pairs(
-                fps,
-                max_hamming=cfg.simhash_max_hamming,
-                max_bucket_size=cfg.max_bucket_size,
-            ).select("doc_a", "doc_b")
-
-        def build_substring_cands():
-            return suffix.substring_candidate_pairs(
-                url_unique,
-                max_bucket_size=cfg.max_bucket_size,
-                winnow=(
-                    fingerprints.select("doc_id", "winnow")
-                    if cfg.fused_fingerprints
-                    else None
-                ),
-            )
-
-        # 05 persisted (it's tiny — two longs per verified pair): the
-        # substring verify anti-joins against it, and a lazy plan would
-        # re-run the whole verify DAG for that second consumer
-        specs = [
-            ("05_minhash_pairs",
-             lambda: self._stage("05_minhash_pairs", build_minhash_pairs,
-                                 resume, kind="persist")),
-        ]
-        if cfg.with_simhash_stage:
-            specs.append(
-                ("06_simhash_pairs",
-                 lambda: self._stage("06_simhash_pairs", build_simhash_pairs,
-                                     resume, kind="persist"))
-            )
-        if cfg.with_substring_stage:
-            specs.append(
-                ("07_substring_cands",
-                 lambda: self._stage("07_substring_cands", build_substring_cands,
-                                     resume, kind="persist"))
-            )
-        # 03 last: cheapest member, fills the tail the 05 wall leaves
-        specs.append(
-            ("03_exact_text_pairs",
-             lambda: self._stage("03_exact_text_pairs", build_text_pairs,
-                                 resume, kind="persist"))
-        )
-        staged = self._materialize_stages(specs, resume)
-        minhash_pairs = staged["05_minhash_pairs"]
-        simhash_pairs = staged.get("06_simhash_pairs")
-        substr_cands = staged.get("07_substring_cands")
-        text_pairs = staged["03_exact_text_pairs"]
-
-        if substr_cands is not None:
-            def build_substring_pairs():
-                cands = substr_cands.join(
-                    minhash_pairs, ["doc_a", "doc_b"], "left_anti"
-                )
-                return suffix.verify_substring_pairs(
-                    cands, url_unique, min_length=cfg.substring_min_len
-                ).select("doc_a", "doc_b")
-
-            substr_pairs = self._stage("07_substring_pairs", build_substring_pairs, resume, kind="ephemeral")
-        else:
-            substr_pairs = None
-
-        # ---- stage 7: clustering ----
-        def build_clusters():
-            evidence = text_pairs.unionByName(minhash_pairs)
-            if simhash_pairs is not None:
-                evidence = evidence.unionByName(simhash_pairs)
-            if substr_pairs is not None:
-                evidence = evidence.unionByName(substr_pairs)
-            # no explicit distinct: connected_components dedups its
-            # edge input anyway, so the extra shuffle wave would sit
-            # on the critical path twice (the observed row count is
-            # therefore pre-dedup evidence rows)
-            return dedup.cluster_assignments(
-                url_unique, observed("evidence_pairs", evidence)
-            )
-
-        clusters = self._stage("08_clusters", build_clusters, resume, kind="ephemeral")
-
-        # ---- final output: url -> cluster ----
-        def build_output():
-            return url_unique.join(clusters, "doc_id").select(
-                "doc_id", "norm_url", "domain", "cluster_id"
-            )
-
-        output = self._stage("09_assignments", build_output, resume)
-        self._join_writes()
-
-        summary = {
-            "config": {
-                k: v for k, v in vars(cfg).items() if not isinstance(v, dict)
-            },
-            "stages": self.metrics,
-            "n_output": output.count() if self.count_rows else None,
-            # observe()-based counters, recorded on the physical pass
-            # itself (no extra jobs); absent for resumed stages
-            "observed": {
-                name: _safe_observation(obs)
-                for name, obs in self._observations.items()
-            },
-        }
-        if self.count_rows:
-            # per-partition lineage/metrics (north rule): row counts of
-            # the final assignments per physical partition — one cheap
-            # aggregation on spark_partition_id
-            partition_rows = (
-                output.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .orderBy("pid")
-                .collect()
-            )
-            summary["output_partitions"] = [
-                {"partition": r["pid"], "rows": r["count"]} for r in partition_rows
-            ]
-        with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
-            fh.write(json.dumps(summary, default=str) + "\n")
-        return summary
+        """Batch run: the delta run against ``FingerprintStore.empty``.
+        It keeps the session's shuffle width — sizing the width to the
+        input is a delta concern (``run_incremental``)."""
+        return self._run(pages, FingerprintStore.empty(self.spark), resume)
 
     def run_incremental(
         self,
@@ -724,13 +476,17 @@ class DedupPipeline:
         base run's assignments already encode them and re-enter the
         clustering as membership edges.
 
-        Equivalence to one full run over base ∪ delta (pinned by
-        tests/test_incremental.py) holds when (a) the store was built
-        with the same DedupConfig, (b) bucket caps do not bind
-        differently across the split, and (c) the delta's captures are
-        not earlier than the store's for shared norm_urls (this path
-        keeps the store's representative — first-seen-wins, the
-        streaming path's semantics).
+        Equivalence to one full run over base ∪ delta holds by
+        construction: ``run`` is this same stage graph against the
+        empty store, so the two share every stage and operator.  It
+        needs (a) the store built with the same DedupConfig (checked),
+        (b) bucket caps that do not bind differently across the split,
+        and (c) delta captures not earlier than the store's for shared
+        norm_urls (this path keeps the store's representative —
+        first-seen-wins, the streaming path's semantics).
+        tests/test_incremental.py pins base + delta == full run, and
+        tests/test_pipeline_vs_single_node_model.py checks the graph
+        against an independent single-node model.
 
         The run's workdir gains delta-scoped 02_url_dedup /
         04_fingerprints snapshots plus the merged 09_assignments, so
@@ -752,21 +508,16 @@ class DedupPipeline:
         scale the same rule holds: size a delta job's shuffle width to
         the delta, not the cluster.  Pass None to leave the session
         untouched, or an int to pin it."""
-        cfg = self.config
-        if not cfg.fused_fingerprints:
-            raise ValueError("run_incremental requires fused_fingerprints=True")
-        store.check_config(cfg)
-        self._persist_config()
+        store.check_config(self.config)
 
         session_width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._delta_rows = None
+        delta_rows = None
         if shuffle_partitions == "auto":
             # delta-scale count: reads only parquet footers / the
             # filter column, never text
-            n_delta = new_pages.count()
-            self._delta_rows = n_delta
+            delta_rows = new_pages.count()
             shuffle_partitions = min(
-                session_width, max(8, -(-n_delta // 1000))
+                session_width, max(8, -(-delta_rows // 1000))
             )
         if shuffle_partitions is not None and shuffle_partitions != session_width:
             self.spark.conf.set(
@@ -776,287 +527,317 @@ class DedupPipeline:
             shuffle_partitions if shuffle_partitions is not None else session_width
         )
         try:
-            return self._run_incremental_body(new_pages, store, resume)
+            return self._run(new_pages, store, resume, delta_rows)
         finally:
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions", str(session_width)
             )
 
-    def _run_incremental_body(
+    def _run(
         self,
-        new_pages: DataFrame,
+        pages: DataFrame,
         store: FingerprintStore,
         resume: bool,
+        delta_rows: int | None = None,
     ) -> dict:
+        """The one stage graph.  Against the empty store (``run``) the
+        optimizer drops every store side from the plans, and the two
+        materializations that only pay off against stored rows — the
+        05_candidates persist with its id collect for the store prune,
+        and the 08_evidence persist the merge walks several times —
+        stay lazy frames.  ``delta_rows`` (counted by
+        ``run_incremental``) gates the broadcast store pre-filter."""
         cfg = self.config
+        batch = store.is_empty
+        # every run reports only its own stages and counters
+        self.metrics = []
+        self._observations = {}
+        self._persist_config()
 
+        # free row-count metrics via observe(): recorded on the single
+        # physical pass, no extra jobs (the north rule's per-stage
+        # metrics without count() barriers)
         from pyspark.sql import Observation
 
         from ..operators import incremental as inc
         from ..operators.fingerprints import fused_fingerprints
-
-        self._observations = {}
 
         def observed(name: str, df: DataFrame) -> DataFrame:
             obs = Observation(name)
             self._observations[name] = obs
             return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-        canonical = self._stage(
-            "01_canonical",
-            lambda: observed("canonical_rows", self._canonical_frame(new_pages)),
-            resume,
-            kind="ephemeral",
-        )
-
         # guide §3.2 pre-filter gate: the delta's distinct bucket keys
         # (<= rows x bands) must comfortably fit a broadcast before the
         # store side may be semi-join-pruned ahead of its exchange;
-        # unknown delta size (caller pinned the shuffle width) keeps
-        # the always-safe union shape.  8M keys ~ 64 MB broadcast.
+        # unknown delta size (a batch run, or a pinned shuffle width)
+        # keeps the always-safe union shape.  8M keys ~ 64 MB broadcast.
         prune_old = (
-            self._delta_rows is not None
-            and self._delta_rows * max(cfg.bands, 20) <= 8_000_000
+            delta_rows is not None
+            and delta_rows * max(cfg.bands, 20) <= 8_000_000
         )
 
-        # delta URL dedup, then first-seen-wins against the store: a
-        # norm_url the store already holds keeps its old representative
-        def build_url_dedup():
-            among_new = dedup.exact_dedup(
-                canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
-                key_cols=["norm_url"],
-                order_cols=["warc_ts", "doc_id"],
-                salt_partitions=cfg.salt_partitions,
-            )
-            return among_new.join(
-                store.docs.select("norm_url"), "norm_url", "left_anti"
-            ).select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang", "n_copies")
+        def with_store(new: DataFrame, old: DataFrame, ids) -> DataFrame:
+            return new.unionByName(inc.prune_store_by_ids(old, ids))
 
-        url_unique = self._stage("02_url_dedup", build_url_dedup, resume,
-                                 kind="persist_lazy", overlap_write=True)
-
-        # optional training-data quality gate (config bounds), applied
-        # identically in full and incremental modes — per-row
-        # deterministic, so the two stay provably equivalent
-        quality = self._quality_condition()
-        if quality is not None:
-            url_unique = self._stage(
-                "02b_quality_gate",
-                lambda: observed("quality_kept", url_unique.where(quality)),
-                resume,
-                kind="lazy",
-            )
-
-        # the delta's ONLY text scan: fused MinHash+SimHash+winnow+md5
-        fingerprints = self._stage(
-            "04_fingerprints",
-            lambda: fused_fingerprints(
-                url_unique,
-                num_perm=cfg.num_perm,
-                shingle_k=cfg.shingle_k,
-                seed=cfg.seed,
-                bands=cfg.bands,
-            ),
-            resume,
-            kind="persist",
-            overlap_write=True,
-        )
-        store_fps = store.fingerprints
-
-        # LSH candidates persist: the verify stage walks them twice
-        # (estimate prefilter + payload attach), and the observation
-        # must record on exactly one execution of the pass
-        def build_candidates():
-            lsh_obs = Observation("05_lsh_buckets")
-            self._observations["lsh_buckets"] = lsh_obs
-            # both sides explode STORED band keys: the store never
-            # pays a Python pass, however large it has grown
-            def bucket_rows(df):
-                return df.select("doc_id", F.explode("bands").alias("band_key"))
-
-            return inc.incremental_minhash_pairs(
-                fingerprints.select("doc_id", "signature"),
-                store_fps.select("doc_id", "signature"),
-                prune_old_by_new_keys=prune_old,
-                bands=cfg.bands,
-                max_bucket_size=cfg.max_bucket_size,
-                observation=lsh_obs,
-                new_buckets=bucket_rows(fingerprints),
-                old_buckets=(
-                    bucket_rows(store_fps)
-                    if "bands" in store_fps.columns
-                    else None
-                ),
-            )
-
-        # ---- delta evidence stages, OVERLAPPED (guide §2.6) ----
-        # The MinHash chain (candidates -> verify) is the long pole of
-        # a delta run; the exact-text, SimHash and substring-candidate
-        # stages depend only on the delta fingerprints + the store, so
-        # their (snapshot-writing) jobs run concurrently and back-fill
-        # the chain's stage tails — in snapshot_mode="all" the r5 shape
-        # serialized ELEVEN write jobs end to end, the measured
-        # core-count-independent serial term of the spark-submit
-        # scaling record.  The MinHash chain is submitted first and
-        # keeps FIFO priority.
-        def run_minhash_chain():
-            candidates = self._stage(
-                "05_candidates", build_candidates, resume, kind="persist"
-            )
-
-            # verify inputs: the delta side unions with a store side
-            # PRUNED to candidate partners — a bounded id collect from
-            # the persisted pair set (no DAG re-run, unlike round 3's
-            # dropped semi-join prunes) pushed into the store scan as
-            # an In predicate, which the doc_id-sorted store snapshots
-            # turn into parquet file skipping.  The verify reads store
-            # rows proportional to the candidate set, not the corpus.
-            def build_minhash_pairs():
-                # the pair-payload attach inside verify explodes the
-                # (small) pair set and broadcast-joins it against the
-                # pruned union: only matched store rows ever shuffle,
-                # in the same scan.  One bounded id collect serves both
-                # pruned store scans.
-                cand_ids = inc.collect_pair_ids([candidates])
-                return dedup.verify_pairs_jaccard(
-                    candidates,
-                    url_unique.select("doc_id", "text").unionByName(
-                        inc.prune_store_by_ids(
-                            store.docs.select("doc_id", "text"), cand_ids
-                        )
-                    ),
-                    signatures=fingerprints.select("doc_id", "signature").unionByName(
-                        inc.prune_store_by_ids(
-                            store_fps.select("doc_id", "signature"), cand_ids
-                        )
-                    ),
-                    threshold=cfg.jaccard_threshold,
-                    shingle_k=cfg.shingle_k,
-                ).select("doc_a", "doc_b")
-
-            return self._stage(
-                "05_minhash_pairs", build_minhash_pairs, resume, kind="persist"
-            )
-
-        specs = [("05_minhash_pairs", run_minhash_chain)]
-        # exact-text edges from stored hashes — no old text read
-        specs.append(
-            ("03_exact_text_pairs",
-             lambda: self._stage(
-                 "03_exact_text_pairs",
-                 lambda: inc.incremental_text_pairs(
-                     fingerprints.select("doc_id", "text_hash"),
-                     store_fps.select("doc_id", "text_hash"),
-                 ),
-                 resume,
-                 kind="lazy",
-             ))
-        )
-        if cfg.with_simhash_stage:
-            specs.append(
-                ("06_simhash_pairs",
-                 lambda: self._stage(
-                     "06_simhash_pairs",
-                     lambda: inc.incremental_simhash_pairs(
-                         fingerprints.select("doc_id", "simhash"),
-                         store_fps.select("doc_id", "simhash"),
-                         max_hamming=cfg.simhash_max_hamming,
-                         max_bucket_size=cfg.max_bucket_size,
-                         prune_old_by_new_keys=prune_old,
-                     ).select("doc_a", "doc_b"),
-                     resume,
-                     kind="lazy",
-                 ))
-            )
-        if cfg.with_substring_stage:
-            # candidates WITHOUT the anti-join against the MinHash
-            # verdicts (that dependency would serialize this stage
-            # behind the whole 05 chain) — the anti-join applies at
-            # verify time below, which is equivalent: evidence is a
-            # union, so pruning already-verified pairs from the LCS
-            # pass changes nothing in the merged clusters
-            specs.append(
-                ("07_substring_cands",
-                 lambda: self._stage(
-                     "07_substring_cands",
-                     lambda: inc.incremental_substring_candidates(
-                         fingerprints.select("doc_id", "winnow"),
-                         store_fps.select("doc_id", "winnow"),
-                         max_bucket_size=cfg.max_bucket_size,
-                         prune_old_by_new_keys=prune_old,
-                     ),
-                     resume,
-                     kind="persist",
-                 ))
-            )
-        staged = self._materialize_stages(specs, resume)
-        minhash_pairs = staged["05_minhash_pairs"]
-        text_pairs = staged["03_exact_text_pairs"]
-        simhash_pairs = staged.get("06_simhash_pairs")
-        substr_cands = staged.get("07_substring_cands")
-
-        if substr_cands is not None:
-            fresh_cands = substr_cands.join(
-                minhash_pairs, ["doc_a", "doc_b"], "left_anti"
-            )
-            substr_pairs = self._stage(
-                "07_substring_pairs",
-                lambda: suffix.verify_substring_pairs(
-                    fresh_cands,
-                    url_unique.select("doc_id", "text").unionByName(
-                        inc.prune_store_by_pair_ids(
-                            store.docs.select("doc_id", "text"), [fresh_cands]
-                        )
-                    ),
-                    min_length=cfg.substring_min_len,
-                ).select("doc_a", "doc_b"),
+        try:
+            # ---- stage 1: URL canonicalization (vectorized check_url) ----
+            canonical = self._stage(
+                "01_canonical",
+                lambda: observed("canonical_rows", self._canonical_frame(pages)),
                 resume,
                 kind="ephemeral",
             )
-        else:
+
+            # ---- stage 2: exact URL dedup ----
+            # earliest capture wins within the batch; a norm_url the
+            # store already holds keeps its old representative (first-
+            # seen-wins — against the empty store, earliest capture)
+            def build_url_dedup():
+                among_new = dedup.exact_dedup(
+                    canonical.select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang"),
+                    key_cols=["norm_url"],
+                    order_cols=["warc_ts", "doc_id"],
+                    salt_partitions=cfg.salt_partitions,
+                )
+                return among_new.join(
+                    store.docs.select("norm_url"), "norm_url", "left_anti"
+                ).select("doc_id", "norm_url", "domain", "warc_ts", "text", "lang", "n_copies")
+
+            url_unique = self._stage("02_url_dedup", build_url_dedup, resume,
+                                     kind="persist_lazy", overlap_write=True)
+
+            # optional training-data quality gate (config bounds) —
+            # per-row deterministic, so batch and delta runs agree
+            quality = self._quality_condition()
+            if quality is not None:
+                url_unique = self._stage(
+                    "02b_quality_gate",
+                    lambda: observed("quality_kept", url_unique.where(quality)),
+                    resume,
+                    kind="lazy",
+                )
+
+            # ---- stage 4: ALL text fingerprints in ONE scan ----
+            # MinHash + SimHash + winnowing + LSH band keys + md5 share
+            # a single Arrow transfer and text decode
+            # (operators/fingerprints.py): the run's only text scan
+            fingerprints = self._stage(
+                "04_fingerprints",
+                lambda: fused_fingerprints(
+                    url_unique,
+                    num_perm=cfg.num_perm,
+                    shingle_k=cfg.shingle_k,
+                    seed=cfg.seed,
+                    bands=cfg.bands,
+                ),
+                resume,
+                kind="persist",
+                overlap_write=True,
+            )
+            store_fps = store.fingerprints
+
+            def build_candidates():
+                # dropped-bucket accounting rides observe() on the pass
+                # that computes the buckets anyway — zero extra jobs
+                lsh_obs = Observation("05_lsh_buckets")
+                self._observations["lsh_buckets"] = lsh_obs
+
+                # both sides explode STORED band keys: no band-hash
+                # Python pass, however large the store has grown
+                def bucket_rows(df):
+                    return df.select("doc_id", F.explode("bands").alias("band_key"))
+
+                return inc.incremental_minhash_pairs(
+                    fingerprints.select("doc_id", "signature"),
+                    store_fps.select("doc_id", "signature"),
+                    prune_old_by_new_keys=prune_old,
+                    bands=cfg.bands,
+                    max_bucket_size=cfg.max_bucket_size,
+                    observation=lsh_obs,
+                    new_buckets=bucket_rows(fingerprints),
+                    old_buckets=bucket_rows(store_fps),
+                )
+
+            def run_minhash_chain():
+                # with stored rows the candidates persist: the store
+                # prune collects their ids before the verify walks them,
+                # and the observation must record on exactly one
+                # execution of the pass.  The batch verify walks them
+                # once, so they stay lazy inside its job.
+                candidates = self._stage(
+                    "05_candidates", build_candidates, resume,
+                    kind="ephemeral" if batch else "persist",
+                )
+
+                def build_minhash_pairs():
+                    # one bounded id collect from the persisted pairs,
+                    # pushed into both store scans as an In predicate
+                    # that the doc_id-sorted store snapshots turn into
+                    # parquet file skipping; the pair-payload attach
+                    # inside verify then broadcast-joins the (small)
+                    # pair set against the pruned union, so only matched
+                    # store rows shuffle.  The empty store has no scan
+                    # to prune, so nothing is collected.
+                    ids = None if batch else inc.collect_pair_ids([candidates])
+                    return dedup.verify_pairs_jaccard(
+                        candidates,
+                        with_store(url_unique.select("doc_id", "text"),
+                                   store.docs.select("doc_id", "text"), ids),
+                        signatures=with_store(
+                            fingerprints.select("doc_id", "signature"),
+                            store_fps.select("doc_id", "signature"), ids),
+                        threshold=cfg.jaccard_threshold,
+                        shingle_k=cfg.shingle_k,
+                    ).select("doc_a", "doc_b")
+
+                # persisted (tiny — two longs per verified pair): the
+                # substring verify anti-joins against it, and a lazy
+                # plan would re-run the whole verify DAG for that
+                # second consumer
+                return self._stage(
+                    "05_minhash_pairs", build_minhash_pairs, resume, kind="persist"
+                )
+
+            # ---- stages 3, 5-7: evidence stages, OVERLAPPED (guide §2.6) ----
+            # Once the fingerprint frame exists, the exact-text, SimHash
+            # and substring-candidate stages share no dependency with
+            # the MinHash verify chain (the long pole), so their jobs
+            # run concurrently and back-fill its stage tails.  The chain
+            # is submitted first and keeps FIFO priority; 03, the
+            # cheapest member, goes last to fill the tail the chain
+            # leaves (OPTIMIZATION_r06.md, row 11).  The
+            # substring candidates skip the anti-join against the
+            # MinHash verdicts (that dependency would serialize them
+            # behind the chain): it applies at verify time below, which
+            # is equivalent — evidence is a union, so pruning pairs
+            # already verified from the LCS pass changes nothing.
+            def overlapped(name: str, build):
+                return name, lambda: self._stage(name, build, resume, kind="persist")
+
+            specs = [("05_minhash_pairs", run_minhash_chain)]
+            if cfg.with_simhash_stage:
+                specs.append(overlapped(
+                    "06_simhash_pairs",
+                    lambda: inc.incremental_simhash_pairs(
+                        fingerprints.select("doc_id", "simhash"),
+                        store_fps.select("doc_id", "simhash"),
+                        max_hamming=cfg.simhash_max_hamming,
+                        max_bucket_size=cfg.max_bucket_size,
+                        prune_old_by_new_keys=prune_old,
+                    ).select("doc_a", "doc_b"),
+                ))
+            if cfg.with_substring_stage:
+                specs.append(overlapped(
+                    "07_substring_cands",
+                    lambda: inc.incremental_substring_candidates(
+                        fingerprints.select("doc_id", "winnow"),
+                        store_fps.select("doc_id", "winnow"),
+                        max_bucket_size=cfg.max_bucket_size,
+                        prune_old_by_new_keys=prune_old,
+                    ),
+                ))
+            # exact-text edges from the stored md5 hashes — no old text read
+            specs.append(overlapped(
+                "03_exact_text_pairs",
+                lambda: inc.incremental_text_pairs(
+                    fingerprints.select("doc_id", "text_hash"),
+                    store_fps.select("doc_id", "text_hash"),
+                ),
+            ))
+            staged = self._materialize_stages(specs)
+            minhash_pairs = staged["05_minhash_pairs"]
+            simhash_pairs = staged.get("06_simhash_pairs")
+            substr_cands = staged.get("07_substring_cands")
+            text_pairs = staged["03_exact_text_pairs"]
+
             substr_pairs = None
+            if substr_cands is not None:
+                fresh_cands = substr_cands.join(
+                    minhash_pairs, ["doc_a", "doc_b"], "left_anti"
+                )
+                substr_pairs = self._stage(
+                    "07_substring_pairs",
+                    lambda: suffix.verify_substring_pairs(
+                        fresh_cands,
+                        url_unique.select("doc_id", "text").unionByName(
+                            inc.prune_store_by_pair_ids(
+                                store.docs.select("doc_id", "text"), [fresh_cands]
+                            )
+                        ),
+                        min_length=cfg.substring_min_len,
+                    ).select("doc_a", "doc_b"),
+                    resume,
+                    kind="ephemeral",
+                )
 
-        # evidence persists (tiny: two longs per pair): merge_assignments
-        # walks it several times — endpoint extraction, the affected-
-        # cluster semi-joins, and every CC iteration — and a lazy union
-        # would re-run the whole verify DAG for each walk
-        def build_evidence():
-            evidence = text_pairs.unionByName(minhash_pairs)
-            if simhash_pairs is not None:
-                evidence = evidence.unionByName(simhash_pairs)
-            if substr_pairs is not None:
-                evidence = evidence.unionByName(substr_pairs)
-            return observed("evidence_pairs", evidence)
+            # ---- stage 8: evidence ----
+            # no explicit distinct: connected components dedup their
+            # edge input anyway (the observed row count is therefore
+            # pre-dedup evidence rows).  With stored rows the evidence
+            # persists (tiny: two longs per pair): merge_assignments
+            # walks it several times — endpoint extraction, the
+            # affected-cluster semi-joins, every CC iteration — and a
+            # lazy union would re-run the verify DAG for each walk.
+            # Against the empty store only the CC edge checkpoint walks
+            # it, so it stays lazy inside that job.
+            def build_evidence():
+                evidence = text_pairs.unionByName(minhash_pairs)
+                for pairs in (simhash_pairs, substr_pairs):
+                    if pairs is not None:
+                        evidence = evidence.unionByName(pairs)
+                return observed("evidence_pairs", evidence)
 
-        evidence = self._stage("08_evidence", build_evidence, resume,
-                               kind="persist", overlap_write=True)
-
-        def build_assignments():
-            merged = inc.merge_assignments(
-                store.assignments,
-                url_unique.select("doc_id"),
-                evidence,
+            evidence = self._stage(
+                "08_evidence", build_evidence, resume,
+                kind="ephemeral" if batch else "persist", overlap_write=True,
             )
-            meta = url_unique.select("doc_id", "norm_url", "domain").unionByName(
-                store.docs.select("doc_id", "norm_url", "domain")
-            )
-            return merged.join(meta, "doc_id").select(
-                "doc_id", "norm_url", "domain", "cluster_id"
-            )
 
-        output = self._stage("09_assignments", build_assignments, resume)
-        self._join_writes()
+            # ---- stage 9: url -> cluster, merged over store ∪ batch ----
+            def build_assignments():
+                merged = inc.merge_assignments(
+                    store.assignments, url_unique.select("doc_id"), evidence
+                )
+                meta = url_unique.select("doc_id", "norm_url", "domain").unionByName(
+                    store.docs.select("doc_id", "norm_url", "domain")
+                )
+                return merged.join(meta, "doc_id").select(
+                    "doc_id", "norm_url", "domain", "cluster_id"
+                )
+
+            output = self._stage("09_assignments", build_assignments, resume)
+            self._join_writes()
+        finally:
+            # no-op after the join above; on an error, the deferred
+            # writes must not outlive the run (a retry starts clean)
+            self._drop_writes()
 
         summary = {
-            "mode": "incremental",
             "config": {k: v for k, v in vars(cfg).items() if not isinstance(v, dict)},
             "stages": self.metrics,
             "n_output": output.count() if self.count_rows else None,
+            # observe()-based counters, recorded on the physical pass
+            # itself (no extra jobs); absent for resumed stages
             "observed": {
                 name: _safe_observation(obs)
                 for name, obs in self._observations.items()
             },
         }
+        if not batch:
+            summary["mode"] = "incremental"
+        elif self.count_rows:
+            # per-partition lineage/metrics (north rule): row counts of
+            # the final assignments per physical partition — one cheap
+            # aggregation on spark_partition_id
+            partition_rows = (
+                output.groupBy(F.spark_partition_id().alias("pid"))
+                .count()
+                .orderBy("pid")
+                .collect()
+            )
+            summary["output_partitions"] = [
+                {"partition": r["pid"], "rows": r["count"]} for r in partition_rows
+            ]
         with open(os.path.join(self.workdir, "metrics.json"), "a") as fh:
             fh.write(json.dumps(summary, default=str) + "\n")
         return summary

@@ -52,24 +52,3 @@ def test_fused_equals_standalone_kernels(spark):
             np.asarray(sigs[doc_id], dtype=np.int64)
         ).tolist()
         assert fused[doc_id]["bands"] == expect, doc_id
-
-
-def test_substring_candidates_from_precomputed_winnow(spark):
-    base = ("one very long boilerplate navigation footer that sites "
-            "repeat verbatim on every single page that they serve today")
-    docs = spark.createDataFrame(
-        [(1, "intro. " + base), (2, "other words. " + base), (3, "unrelated text")],
-        "doc_id long, text string",
-    )
-    direct = {
-        (r["doc_a"], r["doc_b"])
-        for r in suffix.substring_candidate_pairs(docs).collect()
-    }
-    fused = fused_fingerprints(docs)
-    via_fused = {
-        (r["doc_a"], r["doc_b"])
-        for r in suffix.substring_candidate_pairs(
-            docs, winnow=fused.select("doc_id", "winnow")
-        ).collect()
-    }
-    assert direct == via_fused == {(1, 2)}

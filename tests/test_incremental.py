@@ -158,6 +158,7 @@ def test_incremental_bucket_pairs_semantics(spark):
     assert acct["dropped_buckets"] == 1
     assert acct["dropped_rows"] == 4
     assert acct["active_buckets"] == 2  # k1 and (dropped) k3 have a new member
+    assert acct["buckets"] == 3  # k1, k2, k3: every bucket, as in batch
 
 
 def test_incremental_bucket_pairs_prune_identical(spark):
@@ -223,17 +224,52 @@ def test_incremental_text_pairs_connectivity(spark):
 
 
 def test_store_requires_fused_columns(spark):
+    """A workdir whose 04_fingerprints predates the fused store format
+    (signatures only: no text_hash/winnow) is rejected at load."""
+    import os
+
     import pytest
 
-    full = generate_pages(spark, 200).cache()
+    from courlan_spark.sources.tables import write_snapshot
+
     workdir = tempfile.mkdtemp(prefix="inc_nofuse_")
     try:
-        cfg = DedupConfig(jaccard_threshold=0.6, fused_fingerprints=False)
-        DedupPipeline(spark, workdir, cfg).run(pages_view(full))
+        ids = spark.range(3).select(F.col("id").alias("doc_id"))
+        write_snapshot(
+            ids.selectExpr(
+                "doc_id", "concat('https://example.org/', doc_id) as norm_url",
+                "'example.org' as domain", "timestamp'2024-01-01' as warc_ts",
+                "'some text' as text", "'en' as lang", "1L as n_copies",
+            ),
+            os.path.join(workdir, "02_url_dedup"),
+        )
+        write_snapshot(
+            ids.selectExpr("doc_id", "array(doc_id) as signature"),
+            os.path.join(workdir, "04_fingerprints"),
+        )
+        write_snapshot(
+            ids.selectExpr("doc_id", "doc_id as cluster_id"),
+            os.path.join(workdir, "09_assignments"),
+        )
         with pytest.raises(ValueError, match="fused"):
             FingerprintStore.from_workdir(spark, workdir)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_empty_store_leaves_no_store_scan(spark):
+    """A batch run is the delta run against FingerprintStore.empty, so
+    the empty store must vanish from the plans: a union with its docs
+    plans as the other side alone.  An RDD-backed empty frame
+    (createDataFrame([])) stays in the plan as a scan, and every store
+    side keeps its unions, joins and exchanges."""
+    store = FingerprintStore.empty(spark)
+    assert store.is_empty
+    docs = spark.range(5).selectExpr("id as doc_id", "'t' as text")
+    unioned = docs.unionByName(store.docs.select("doc_id", "text"))
+    plan = unioned._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan and "ExistingRDD" not in plan, plan
+    assert not FingerprintStore(docs, docs, docs).is_empty
 
 
 def test_incremental_resume_after_failure(spark):
@@ -624,3 +660,30 @@ def test_interval_predicate_over_approximates_and_bounds_size():
     # clustered ids yield few tight ranges, excluding most of the space
     tight = _interval_predicate(list(range(100, 200)), "doc_id")
     assert tight == "(doc_id BETWEEN 100 AND 199)"
+
+
+def test_simhash_block_keys_meet_within_max_hamming(spark):
+    """Manku blocking: two fingerprints at most max_hamming bits apart
+    share a block key, for flips anywhere in the 64 bits (the last
+    block is the wider one)."""
+    import random
+
+    from courlan_spark.operators.dedup import simhash_block_keys
+
+    def signed(x):
+        return x - (1 << 64) if x >= 1 << 63 else x
+
+    rng = random.Random(11)
+    rows = []
+    for i in range(200):
+        base = rng.getrandbits(64)
+        near = base
+        for bit in rng.sample(range(64), rng.randint(1, 3)):
+            near ^= 1 << bit
+        rows += [(2 * i, signed(base)), (2 * i + 1, signed(near))]
+    keys = simhash_block_keys(spark.createDataFrame(rows, "doc_id long, simhash long"))
+    by_doc = {}
+    for r in keys.collect():
+        by_doc.setdefault(r["doc_id"], set()).add(r["block_key"])
+    assert all(len(k) == 20 for k in by_doc.values())
+    assert all(by_doc[2 * i] & by_doc[2 * i + 1] for i in range(200))

@@ -98,7 +98,7 @@ def test_partial_resume_after_failure(spark):
             if m.get("resumed") is False
         }
         assert "02_url_dedup" in resumed and "04_fingerprints" in resumed
-        # 01_canonical and 08_clusters are EPHEMERAL since round 6
+        # 01_canonical and 08_evidence are EPHEMERAL in a batch run
         # (lazy in every snapshot mode — their write jobs were pure
         # serial-term): they recompute deterministically inside their
         # durable consumers instead of appearing as resumable snapshots
@@ -106,7 +106,7 @@ def test_partial_resume_after_failure(spark):
             m["stage"] for m in summary["stages"]
             if m.get("kind") == "ephemeral"
         }
-        assert "01_canonical" in ephemeral and "08_clusters" in ephemeral
+        assert "01_canonical" in ephemeral and "08_evidence" in ephemeral
         assert "05_minhash_pairs" in rebuilt and "09_assignments" in rebuilt
         after = sorted(
             (r["doc_id"], r["cluster_id"]) for r in pipe2.assignments().collect()
@@ -151,3 +151,45 @@ def test_quality_gate_filters_corpus(spark):
     finally:
         shutil.rmtree(wd_all, ignore_errors=True)
         shutil.rmtree(wd_gated, ignore_errors=True)
+
+
+def test_failed_run_leaves_no_writes_and_retry_is_clean(spark, monkeypatch):
+    """An operator failing after the 02/04 snapshot writes were deferred
+    leaves no write pool and no pending writes; a retry on the same
+    pipeline object equals a clean run and reports each stage once."""
+    import pytest
+
+    from courlan_spark.operators import dedup
+
+    def assignments(pipe):
+        return sorted(
+            (r["doc_id"], r["cluster_id"]) for r in pipe.assignments().collect()
+        )
+
+    full = generate_pages(spark, 300).cache()
+    dirs = [tempfile.mkdtemp(prefix=f"dedup_fail_{k}_") for k in ("clean", "retry")]
+    try:
+        cfg = DedupConfig(jaccard_threshold=0.6)
+        clean = DedupPipeline(spark, dirs[0], cfg)
+        clean.run(pages_view(full))
+
+        def fail(*args, **kwargs):
+            raise RuntimeError("verify failed")
+
+        pipe = DedupPipeline(spark, dirs[1], cfg)
+        with monkeypatch.context() as patch:
+            patch.setattr(dedup, "verify_pairs_jaccard", fail)
+            with pytest.raises(RuntimeError, match="verify failed"):
+                pipe.run(pages_view(full))
+        deferred = {m["stage"] for m in pipe.metrics if m.get("kind") == "snapshot_overlap"}
+        assert {"02_url_dedup", "04_fingerprints"} <= deferred
+        assert pipe._write_pool is None and pipe._pending_writes == []
+
+        summary = pipe.run(pages_view(full))
+        names = [m["stage"] for m in summary["stages"]]
+        assert len(names) == len(set(names)), names
+        assert "09_assignments" in names
+        assert assignments(pipe) == assignments(clean)
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
